@@ -1,37 +1,45 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.conditions.Cond
+import org.apache.spark.sql.types.StructType
+import graft.conditions.{Cond, True}
 
 /** Conditional fan-out routing to N sink tables — Logstash's output-section
   * if/else-gated outputs (SURVEY.md §2.6/§3), Spark-first.
   *
   * Physical plan stance (the one real physical decision, SURVEY.md §4):
   * the parsed+enriched trunk is materialized ONCE (persist MEMORY_AND_DISK),
-  * then each sink is a filter+write over the cached trunk and all per-sink
-  * counts come from a SINGLE aggregate pass over boolean match flags — never
-  * one `count()` job per sink. At 100 TB this means one scan of the input,
-  * one pass for aggregates, and per-sink writes that each read the cache,
-  * instead of N+1 input scans.
+  * then the sinks are written from the cached trunk (plain sinks in one
+  * shared pass, see [[Route.run]]) and all per-sink counts come from a
+  * SINGLE aggregate pass over boolean match flags — never one `count()` job
+  * per sink. At 100 TB this means one scan of the input, one pass for
+  * aggregates, and sink writes that read the cache, instead of N+1 input
+  * scans.
   *
   * Logstash outputs are independently gated (an event can match several
   * sinks); `default` catches rows matching none — both supported.
   */
 object Route {
 
-  /** `indexTemplate`: the elasticsearch output's per-event sprintf'd index
+  /** One routed output of [[run]]: `name` is its directory under `outDir`,
+    * `cond` gates which events reach it, `decorator` edits them on the way.
+    * The remaining fields are optional output surfaces; a sink with none of
+    * them and the identity decorator is `plain`.
+    *
+    * `indexTemplate`: the elasticsearch output's per-event sprintf'd index
     * name (e.g. `logs-%{+YYYY.MM.dd}` daily indices). When set, the sink is
     * written `partitionBy(_index)` with the evaluated template — each index
     * value becomes one partition directory of the sink, the lake analogue
     * of per-day indices, and stays partition-prunable by date.
-    */
-  /** `codec`: sink serialization — None = parquet (the lake-native default);
+    *
+    * `codec`: sink serialization — None = parquet (the lake-native default);
     * `json_lines` = one JSON document per line in text files (the reference
     * file output's DEFAULT codec), encoded executor-side via toJSON.
-    */
-  /** `documentId`: the elasticsearch output's `document_id => "%{...}"` —
+    *
+    * `documentId`: the elasticsearch output's `document_id => "%{...}"` —
     * indexing twice under one id upserts, making replays and duplicate
     * events idempotent. Batch analogue: the sink keeps ONE row per rendered
     * id (per index when the index is also templated, matching ES identity =
@@ -41,13 +49,13 @@ object Route {
     * groupBy(min(struct)) so the exchange gets map-side combine and keys on
     * the id hash — the exact analogue of ES routing documents to shards by
     * _id hash.
-    */
-  /** `csvFields`/`csvSep`: the csv output plugin (logstash-output-csv) —
+    *
+    * `csvFields`/`csvSep`: the csv output plugin (logstash-output-csv) —
     * codec "csv" writes the selected event fields joined by the separator,
     * one line per event (no quoting: the token world's values are
     * separator-free; a quoting writer would slot in here).
-    */
-  /** `esAction`: the elasticsearch output's `action` — a sprintf template
+    *
+    * `esAction`: the elasticsearch output's `action` — a sprintf template
     * (static string = constant action) rendering per event to
     * index|create|update|delete. Batch reduction per (index, id) over the
     * same grouped machinery as `documentId`, in the deterministic
@@ -60,6 +68,9 @@ object Route {
     *    ES version-conflicts the rest); mixed groups prefer the last
     *    index/update (it would overwrite whatever the create put there).
     * Absent => the documentId default (deterministic min-struct upsert).
+    *
+    * `lineFormat`: the line codec's sprintf'd per-event format
+    * (`format => "%{message} %{tags}"`); absent renders `%{message}`.
     */
   final case class SinkSpec(name: String, cond: Cond,
                             decorator: Mutate.Decorator = Mutate.Decorator(),
@@ -69,7 +80,14 @@ object Route {
                             csvFields: Seq[String] = Nil,
                             csvSep: String = ",",
                             esAction: Option[String] = None,
-                            lineFormat: Option[String] = None)
+                            lineFormat: Option[String] = None) {
+    /** Its frame is exactly filter(flag) + drop(internal columns): the same
+      * payload columns as every other plain sink and the default branch.
+      */
+    def plain: Boolean =
+      indexTemplate.isEmpty && codec.isEmpty && documentId.isEmpty && csvFields.isEmpty &&
+        esAction.isEmpty && lineFormat.isEmpty && decorator == Mutate.Decorator()
+  }
 
   /** Columns whose names start with this prefix are the `@metadata` analogue:
     * available to conditions/decorators, dropped before every sink write
@@ -85,54 +103,39 @@ object Route {
 
   def flagCol(sink: String): String = s"_m_$sink"
 
+  /** True on rows that match no sink; every row with zero sinks. */
+  private def matchesNone(sinks: Seq[SinkSpec]): Column =
+    sinks.map(s => !col(flagCol(s.name))).reduceOption(_ && _).getOrElse(lit(true))
+
+  private def dropInternal(df: DataFrame): DataFrame =
+    df.drop(df.columns.filter(c => c.startsWith("_m_") || c.startsWith(MetaPrefix)).toIndexedSeq: _*)
+
   /** Per-sink routed frame (decorated, metadata dropped) from a flagged trunk. */
-  def sinkFrame(flagged: DataFrame, spec: SinkSpec): DataFrame = {
-    val matched = flagged.filter(col(flagCol(spec.name)))
-    val decorated = spec.decorator(matched)
-    val dropCols = decorated.columns.filter(c => c.startsWith("_m_") || c.startsWith(MetaPrefix))
-    decorated.drop(dropCols.toIndexedSeq: _*)
-  }
+  def sinkFrame(flagged: DataFrame, spec: SinkSpec): DataFrame =
+    dropInternal(spec.decorator(flagged.filter(col(flagCol(spec.name)))))
 
   /** Rows matching no sink (the implicit else branch). With zero sinks
     * (e.g. a config whose only outputs are network sinks) every row is
     * unmatched.
     */
-  def defaultFrame(flagged: DataFrame, sinks: Seq[SinkSpec]): DataFrame = {
-    val none = sinks.map(s => !col(flagCol(s.name)))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val d = flagged.filter(none)
-    d.drop(d.columns.filter(c => c.startsWith("_m_") || c.startsWith(MetaPrefix)).toIndexedSeq: _*)
-  }
+  def defaultFrame(flagged: DataFrame, sinks: Seq[SinkSpec]): DataFrame =
+    dropInternal(flagged.filter(matchesNone(sinks)))
 
   /** Single-pass per-sink aggregate counts (the north-rule invariant —
     * Logstash's per-output events.out counters). One narrow aggregate job.
     */
-  def sinkCounts(flagged: DataFrame, sinks: Seq[SinkSpec], withDefault: Boolean = true): DataFrame = {
+  def sinkCounts(flagged: DataFrame, sinks: Seq[SinkSpec]): DataFrame = {
     // sums coalesced to 0: on an EMPTY trunk sum() is SQL NULL, which would
     // NPE run()'s counts collection — empty inputs must report zeros.
     val sums: Seq[Column] = sinks.map(s =>
       coalesce(sum(col(flagCol(s.name)).cast("long")), lit(0L)).as(s.name)) ++
-      (if (withDefault) {
-        val anyMatch = sinks.map(s => col(flagCol(s.name)))
-          .reduceOption(_ || _).getOrElse(lit(false)) // zero sinks: all default
-        Seq(coalesce(sum((!anyMatch).cast("long")), lit(0L)).as("_default"),
-            count(lit(1)).as("_total"))
-      } else Seq(count(lit(1)).as("_total")))
+      Seq(coalesce(sum(matchesNone(sinks).cast("long")), lit(0L)).as("_default"),
+          count(lit(1)).as("_total"))
     val wide = flagged.agg(sums.head, sums.tail: _*)
     // long form: (sink, n) — stable shape for the metrics table
     val pairs = wide.columns.map(c => struct(lit(c).as("sink"), col(c).as("n")))
     wide.select(explode(array(pairs.toIndexedSeq: _*)).as("kv"))
       .select(col("kv.sink").as("sink"), col("kv.n").as("n"))
-  }
-
-  /** Per-partition lineage: (partition id, rows, per-sink matched rows) —
-    * persisted alongside sinks so a resumed job can prove per-partition
-    * completeness (the PQ-checkpoint analogue, SURVEY.md §2.7).
-    */
-  def lineage(flagged: DataFrame, sinks: Seq[SinkSpec]): DataFrame = {
-    val aggs = count(lit(1)).as("rows") +:
-      sinks.map(s => sum(col(flagCol(s.name)).cast("long")).as(s"n_${s.name}"))
-    flagged.groupBy(spark_partition_id().as("part")).agg(aggs.head, aggs.tail: _*)
   }
 
   final case class RunResult(counts: Map[String, Long], sinkPaths: Map[String, String],
@@ -231,19 +234,26 @@ object Route {
     }
   }
 
-  /** Execute the fan-out: persist trunk, write every sink + default + dlq +
-    * lineage + counts to `outDir`. Idempotent/resumable: a sink directory
-    * with a `_SUCCESS` marker is skipped on re-run (counts are recomputed
-    * from the trunk, so resumed runs still report exact totals).
-    */
-  /** Execute the fan-out. `ordered = true` reproduces the reference's
-    * `pipeline.ordered` mode (CompiledPipeline.java:317-352): sink files are
-    * range-partitioned and sorted by doc_id, so output order is deterministic
-    * — at the cost of one extra range shuffle, exactly like the reference
-    * pays single-worker serialization. Default is unordered (like the
-    * reference default).
-    */
-  /** `buckets > 0` adds partition-level idempotent overwrite: every sink is
+  /** Execute the fan-out: persist the flagged trunk, then write every sink,
+    * the default branch (`writeDefault`), `_lineage`, `_counts` and a
+    * manifest to `outDir`.
+    *
+    * Resumable: a sink directory with a `_SUCCESS` marker is skipped and
+    * listed as resumed (counts are recomputed from the trunk, so resumed
+    * runs still report exact totals). One `outDir` takes one run at a time:
+    * a run starts by deleting every `.sinkstage-*` dir under it (debris of
+    * a crashed run), and manifest numbering is max+1.
+    *
+    * Sink names must be non-empty, distinct, free of `/`, and must not
+    * start with `_` (the internal tables and count keys) or `.` (staging).
+    *
+    * `ordered = true` reproduces the reference's `pipeline.ordered` mode
+    * (CompiledPipeline.java:317-352): sink files are range-partitioned and
+    * sorted by doc_id, so output order is deterministic — at the cost of
+    * one extra range shuffle, exactly like the reference pays single-worker
+    * serialization. Default is unordered (like the reference default).
+    *
+    * `buckets > 0` adds partition-level idempotent overwrite: every sink is
     * written `partitionBy(_bucket)` (deterministic hash of doc_id) with
     * dynamic partition overwrite, so a retried run after a partial failure
     * rewrites exactly the bucket directories it produces — never appends
@@ -255,208 +265,67 @@ object Route {
   def run(spark: SparkSession, trunk: DataFrame, sinks: Seq[SinkSpec], outDir: String,
           writeDefault: Boolean = true, ordered: Boolean = false,
           buckets: Int = 0, extraCounts: Map[String, Long] = Map.empty): RunResult = {
+    val names = sinks.map(_.name)
+    require(names.distinct.size == names.size &&
+      names.forall(n => n.nonEmpty && !n.contains('/') && !n.startsWith("_") && !n.startsWith(".")),
+      "sink names must be non-empty, distinct, contain no '/' and not start with '_' or '.': " +
+        names.mkString("[", ", ", "]"))
+    val outPath = new Path(outDir)
+    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(outPath))
+      fs.listStatus(outPath).filter(_.getPath.getName.startsWith(".sinkstage-"))
+        .foreach(st => fs.delete(st.getPath, true))
     val trunk1 =
       if (ordered) trunk.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
       else trunk
     val flagged = withSinkFlags(trunk1, sinks).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val hadoopConf = spark.sparkContext.hadoopConfiguration
-      val resumed = Seq.newBuilder[String]
-      // --- combined single-pass write for PLAIN sinks (r6, guide §2.4/§6) ---
-      // A plain sink (no index/codec/document_id/action/csv/line surface,
-      // identity decorator) writes exactly filter(flag) + drop(internal
-      // columns) — the same payload columns as every other plain sink and
-      // as the default branch. Writing N of them separately re-reads the
-      // persisted trunk N times: N write jobs and, at scale, N full passes
-      // over the routed data. One partitionBy(_sink) write produces all of
-      // them in ONE pass (a row explodes only into the sinks it matches —
-      // exactly the rows the N separate writes hold), then each partition
-      // dir is renamed to the sink's contract path and given its _SUCCESS
-      // marker, so the read-back layout and resume semantics are unchanged.
-      // Falls back to the per-sink writer for: zero-row sinks (preserving
-      // the empty-dir-with-schema layout), `ordered` runs (the dynamic-
-      // partition writer's internal sort on the partition key need not be
-      // stable, and ordered mode's contract is within-file order), bucketed
-      // runs (two-level layout), and names needing partition-path escaping.
-      val outFs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(hadoopConf)
-      def hasSuccess(name: String): Boolean =
-        outFs.exists(new org.apache.hadoop.fs.Path(s"$outDir/$name", "_SUCCESS"))
-      val combineEligible: Seq[SinkSpec] =
-        if (ordered || buckets > 0 || trunk1.columns.contains("_sink")) Nil
-        else sinks.filter(sp =>
-          sp.indexTemplate.isEmpty && sp.codec.isEmpty && sp.documentId.isEmpty &&
-            sp.csvFields.isEmpty && sp.esAction.isEmpty && sp.lineFormat.isEmpty &&
-            sp.decorator == Mutate.Decorator() &&
-            sp.name.nonEmpty && sp.name.forall(c => c.isLetterOrDigit || c == '_' || c == '-'))
-      val combineSinks = combineEligible.filterNot(sp => hasSuccess(sp.name))
-      val combineDefault = writeDefault && !ordered && buckets == 0 &&
-        !trunk1.columns.contains("_sink") && !hasSuccess("_default")
-      val combineTargets = combineSinks.map(_.name) ++
-        (if (combineDefault) Seq("_default") else Nil)
-      val combinedDone: Set[String] =
-        if (combineTargets.size < 2) Set.empty
-        else {
-          val anyMatch = sinks.map(s => col(flagCol(s.name)))
-            .reduceOption(_ || _).getOrElse(lit(false))
-          val labels = combineSinks.map(sp => when(col(flagCol(sp.name)), lit(sp.name))) ++
-            (if (combineDefault) Seq(when(!anyMatch, lit("_default"))) else Nil)
-          val dropCols = flagged.columns
-            .filter(c => c.startsWith("_m_") || c.startsWith(MetaPrefix))
-          val combined = flagged
-            .withColumn("_sink",
-              explode(filter(array(labels.toIndexedSeq: _*), v => v.isNotNull)))
-            .drop(dropCols.toIndexedSeq: _*)
-          // reap staging debris from a crashed previous combined attempt
-          if (outFs.exists(new org.apache.hadoop.fs.Path(outDir)))
-            outFs.listStatus(new org.apache.hadoop.fs.Path(outDir))
-              .filter(_.getPath.getName.startsWith(".sinkstage-"))
-              .foreach(st => outFs.delete(st.getPath, true))
-          val staging = new org.apache.hadoop.fs.Path(
-            outDir, s".sinkstage-${java.util.UUID.randomUUID().toString.take(8)}")
-          try {
-            combined.write.mode("overwrite").partitionBy("_sink").parquet(staging.toString)
-            combineTargets.flatMap { name =>
-              val src = new org.apache.hadoop.fs.Path(staging, s"_sink=$name")
-              if (!outFs.exists(src)) None // zero rows: per-sink fallback keeps the empty layout
-              else {
-                val dst = new org.apache.hadoop.fs.Path(s"$outDir/$name")
-                if (outFs.exists(dst)) outFs.delete(dst, true)
-                require(outFs.rename(src, dst),
-                  s"combined sink write: rename $src -> $dst failed")
-                outFs.create(new org.apache.hadoop.fs.Path(dst, "_SUCCESS"), true).close()
-                Some(name)
-              }
-            }.toSet
-          } finally { outFs.delete(staging, true); () }
-        }
-      def writeIfNeeded(name: String, df: => DataFrame,
-                        indexTemplate: Option[String] = None,
-                        codec: Option[String] = None,
-                        documentId: Option[String] = None,
-                        csvFields: Seq[String] = Nil,
-                        csvSep: String = ",",
-                        esAction: Option[String] = None,
-                        lineFormat: Option[String] = None): String = {
-        val path = s"$outDir/$name"
-        val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-        val fs = success.getFileSystem(hadoopConf)
-        if (combinedDone(name)) () // written this run by the combined single-pass job
-        else if (fs.exists(success)) { resumed += name }
-        else {
-          val d00 = df
-          val dIdx = indexTemplate.fold(d00)(tpl =>
-            d00.withColumn("_index", Mutate.sprintfFor(d00, tpl)))
-          // document_id upsert semantics: one row per (index, id); see
-          // SinkSpec scaladoc for the deterministic-winner contract
-          val d = documentId.fold(dIdx) { tpl =>
-            val keyed0 = dIdx.withColumn("_docid", Mutate.sprintfFor(dIdx, tpl))
-            val keys = (if (indexTemplate.isDefined) Seq("_index") else Nil) :+ "_docid"
-            esAction match {
-              case None =>
-                val payload = keyed0.columns.filterNot(keys.contains)
-                keyed0.groupBy(keys.map(col).toIndexedSeq: _*)
-                  .agg(min(struct(payload.map(col).toIndexedSeq: _*)).as("_row"))
-                  .select((keys.map(col) ++
-                    payload.map(c => col(s"_row.$c").as(c))).toIndexedSeq: _*)
-              case Some(actTpl) =>
-                // action variants (SinkSpec scaladoc): delete tombstones the
-                // id; create keeps first, index/update keep last. One grouped
-                // agg — map-side combined, exchange keyed on the id hash,
-                // exactly like the documentId default.
-                val keyed = keyed0.withColumn("_esact", Mutate.sprintfFor(keyed0, actTpl))
-                val payload = keyed.columns.filterNot(c => keys.contains(c) || c == "_esact")
-                val pay = struct(payload.map(col).toIndexedSeq: _*)
-                val isCreate = col("_esact") === "create"
-                val isDelete = col("_esact") === "delete"
-                keyed.groupBy(keys.map(col).toIndexedSeq: _*)
-                  .agg(
-                    max(when(isDelete, 1).otherwise(0)).as("_del"),
-                    min(when(isCreate, pay)).as("_cfirst"),
-                    max(when(!isDelete && !isCreate, pay)).as("_ulast"))
-                  .filter(col("_del") === 0)
-                  .withColumn("_row",
-                    when(col("_ulast").isNotNull, col("_ulast")).otherwise(col("_cfirst")))
-                  .filter(col("_row").isNotNull) // an id of only-create-less rows can't occur; guard anyway
-                  .select((keys.map(col) ++
-                    payload.map(c => col(s"_row.$c").as(c))).toIndexedSeq: _*)
+      // Two writers. Unordered, unbucketed runs write every plain sink and
+      // the default branch in ONE pass over the trunk: each row explodes
+      // into the ordinals of the outputs it matches, one partitionBy write
+      // stages them as `<label>=<ordinal>` dirs, and each dir is renamed to
+      // its output's path and given its _SUCCESS marker. A plain output
+      // with no rows (no staged dir) is an empty frame with the payload
+      // schema, written from the driver. Every other output — surface
+      // sinks, and all sinks of ordered runs (the dynamic-partition
+      // writer's sort need not keep the within-file doc_id order) or
+      // bucketed runs (two-level layout) — goes through writeSink. The
+      // writes run before the epilogue aggregation: the first of them
+      // fills the trunk cache as it goes, where an aggregation first would
+      // cost adaptive execution a separate cache-building job.
+      val outputs = sinks ++ (if (writeDefault) Seq(SinkSpec("_default", True)) else Nil)
+      val resumed = (outputs.map(_.name) :+ "_lineage")
+        .filter(n => fs.exists(new Path(s"$outDir/$n", "_SUCCESS")))
+      val (combined, single) = outputs.indices.filterNot(i => resumed.contains(outputs(i).name))
+        .partition(i => !ordered && buckets == 0 && outputs(i).plain)
+      if (combined.nonEmpty) {
+        val label = Iterator.iterate("_sink")("_" + _)
+          .find(c => !flagged.columns.exists(_.equalsIgnoreCase(c))).get
+        val labels = combined.map(i =>
+          when(if (i < sinks.size) col(flagCol(sinks(i).name)) else matchesNone(sinks), lit(i)))
+        val staging = new Path(outDir, s".sinkstage-${java.util.UUID.randomUUID().toString.take(8)}")
+        try {
+          dropInternal(flagged.withColumn(label,
+              explode(filter(array(labels: _*), v => v.isNotNull))))
+            .write.mode("overwrite").partitionBy(label).parquet(staging.toString)
+          combined.foreach { i =>
+            val src = new Path(staging, s"$label=$i")
+            val dst = s"$outDir/${outputs(i).name}"
+            if (!fs.exists(src))
+              spark.createDataFrame(java.util.List.of[Row](), dropInternal(flagged).schema)
+                .write.mode("overwrite").parquet(dst)
+            else {
+              fs.delete(new Path(dst), true)
+              require(fs.rename(src, new Path(dst)), s"combined sink write: rename $src -> $dst failed")
+              fs.create(new Path(dst, "_SUCCESS"), true).close()
             }
           }
-          val parts = (if (indexTemplate.isDefined) Seq("_index") else Nil) ++
-            (if (buckets > 0 && d.columns.contains("doc_id")) Seq("_bucket") else Nil)
-          val db = if (parts.contains("_bucket"))
-            d.withColumn("_bucket", pmod(xxhash64(col("doc_id")), lit(buckets)))
-          else d
-          // cluster dynamic-partitioned sinks by their partition values
-          // before the write (r6; guide 6: Iceberg hash distribution-mode
-          // analogue): without it ONE writer task holds rows of EVERY
-          // partition value — it sorts and writes all the dirs serially
-          // (measured 0.8 s single-task writes in pipe_es_daily) and at
-          // scale emits tasks x values small files. The exchange keys on
-          // the rendered value, so each value lands in one task = one
-          // right-sized file per dir; spark.sql.files.maxRecordsPerFile
-          // re-splits a pathologically hot value's file at scale. The
-          // partition count is pinned (defaultParallelism, scale-adaptive)
-          // because a bare keyed repartition is an AQE-coalescible
-          // exchange: byte-based coalescing folds a small sink back onto
-          // one writer task, exactly the serial write this removes.
-          def clustered(body: DataFrame): DataFrame =
-            if (parts.isEmpty) body
-            else body.repartition(
-              body.sparkSession.sparkContext.defaultParallelism,
-              parts.map(col): _*)
-          if (codec.contains("line")) {
-            // line output codec (logstash-codec-line): one sprintf'd line
-            // per event (`format => "%{message} %{tags}"`); default renders
-            // the message field. Partition layout rides beside the value.
-            val tpl = lineFormat.getOrElse("%{message}")
-            val body = db.select(
-              coalesce(Mutate.sprintfFor(db, tpl).cast("string"), lit(""))
-                .as("value") +: parts.map(col): _*)
-            if (parts.nonEmpty)
-              clustered(body).write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(parts: _*).text(path)
-            else body.write.mode("overwrite").text(path)
-          } else if (codec.contains("csv")) {
-            // csv output plugin: selected fields joined per line; partition
-            // layout (index/bucket) rides beside the text value column
-            val body = db.select(
-              concat_ws(csvSep,
-                csvFields.map(c => coalesce(col(c).cast("string"), lit(""))): _*)
-                .as("value") +: parts.map(col): _*)
-            if (parts.nonEmpty)
-              clustered(body).write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(parts: _*).text(path)
-            else body.write.mode("overwrite").text(path)
-          } else if (codec.exists(c => c == "json_lines" || c == "json")) {
-            // reference file-output default codec: one JSON doc per line.
-            // A sprintf'd index/bucket layout still applies: partition
-            // columns ride beside the single text value column, so
-            // codec => json_lines + a dynamic index loses nothing.
-            val payload = db.columns.filterNot(parts.contains)
-            val body = db.select(
-              to_json(struct(payload.map(col).toIndexedSeq: _*)).as("value") +:
-                parts.map(col): _*)
-            if (parts.nonEmpty)
-              clustered(body).write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(parts: _*).text(path)
-            else body.write.mode("overwrite").text(path)
-          } else if (parts.nonEmpty) {
-            clustered(db).write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy(parts: _*).parquet(path)
-          } else db.write.mode("overwrite").parquet(path)
-        }
-        path
+        } finally { fs.delete(staging, true); () }
       }
-      val paths = sinks.map { s =>
-        s.name -> writeIfNeeded(s.name, sinkFrame(flagged, s), s.indexTemplate,
-          s.codec, s.documentId, s.csvFields, s.csvSep, s.esAction, s.lineFormat)
-      }.toMap ++
-        (if (writeDefault) Map("_default" -> writeIfNeeded("_default", defaultFrame(flagged, sinks)))
-         else Map.empty[String, String])
+      single.foreach { i =>
+        val df = if (i < sinks.size) sinkFrame(flagged, sinks(i)) else defaultFrame(flagged, sinks)
+        writeSink(outputs(i), df, s"$outDir/${outputs(i).name}", buckets)
+      }
       // ONE per-partition aggregation produces BOTH epilogue surfaces
       // (r6, guide §2.4): the _lineage rows are its output, and the
       // per-sink counts are their exact integer column sums — the former
@@ -468,31 +337,117 @@ object Route {
       // so that table's schema is unchanged. Callers may ride extra
       // run-level counters along (runConfig records the SOURCE event
       // count as `_in` — the monitoring API's events.in).
-      val anyMatchAll = sinks.map(s => col(flagCol(s.name)))
-        .reduceOption(_ || _).getOrElse(lit(false))
       val lineAgg = flagged.groupBy(spark_partition_id().as("part"))
         .agg(count(lit(1)).as("rows"),
           (sinks.map(s => sum(col(flagCol(s.name)).cast("long")).as(s"n_${s.name}")) :+
-            sum((!anyMatchAll).cast("long")).as("_n_default")): _*)
+            sum(matchesNone(sinks).cast("long")).as("_n_default")): _*)
       val lineRows = lineAgg.collect()
-      val lineSchema = org.apache.spark.sql.types.StructType(lineAgg.schema.dropRight(1))
-      writeIfNeeded("_lineage", spark.createDataFrame(
-        java.util.Arrays.asList(lineRows.map(r =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1))): _*), lineSchema))
+      // matched rows of output `i`: sinks by position, then `_default`
+      def rows(i: Int): Long = lineRows.map(_.getLong(i + 2)).sum
+      if (!resumed.contains("_lineage"))
+        spark.createDataFrame(
+          java.util.Arrays.asList(lineRows.map(r => Row.fromSeq(r.toSeq.dropRight(1))): _*),
+          StructType(lineAgg.schema.dropRight(1)))
+          .write.mode("overwrite").parquet(s"$outDir/_lineage")
       // same names, order and zero-on-empty semantics as sinkCounts():
       // per-partition sums of two-valued flags total to the global sums
-      def colSum(i: Int): Long = lineRows.map(_.getLong(i)).sum
       val collected: Array[(String, Long)] =
-        sinks.zipWithIndex.map { case (s, i) => s.name -> colSum(i + 2) }.toArray ++
-          Array("_default" -> colSum(lineRows.headOption.map(_.length - 1).getOrElse(2)),
-                "_total" -> lineRows.map(_.getLong(1)).sum)
+        sinks.indices.map(i => sinks(i).name -> rows(i)).toArray ++
+          Array("_default" -> rows(sinks.size), "_total" -> lineRows.map(_.getLong(1)).sum)
       val withExtra = collected ++ extraCounts.toSeq.sortBy(_._1)
       spark.createDataFrame(withExtra.toIndexedSeq).toDF("sink", "n")
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_counts")
       val counts = collected.toMap ++ extraCounts
-      val manifest = writeManifest(spark, outDir, counts, paths, resumed.result())
-      RunResult(counts, paths, resumed.result(), manifest)
+      val paths = outputs.map(s => s.name -> s"$outDir/${s.name}").toMap
+      val manifest = writeManifest(spark, outDir, counts, paths, resumed)
+      RunResult(counts, paths, resumed, manifest)
     } finally flagged.unpersist()
+  }
+
+  /** The per-sink writer: every surface sink, and every sink of an ordered
+    * or bucketed run. Applies the index template, the document_id/action
+    * reduction and the bucket column, renders a text codec's `value`
+    * column, then writes once — partitioned by the index/bucket columns
+    * when there are any.
+    */
+  private def writeSink(spec: SinkSpec, df: DataFrame, path: String, buckets: Int): Unit = {
+    val dIdx = spec.indexTemplate.fold(df)(tpl =>
+      df.withColumn("_index", Mutate.sprintfFor(df, tpl)))
+    // document_id upsert semantics: one row per (index, id); see
+    // SinkSpec scaladoc for the deterministic-winner contract
+    val d = spec.documentId.fold(dIdx) { tpl =>
+      val keyed0 = dIdx.withColumn("_docid", Mutate.sprintfFor(dIdx, tpl))
+      val keys = (if (spec.indexTemplate.isDefined) Seq("_index") else Nil) :+ "_docid"
+      spec.esAction match {
+        case None =>
+          val payload = keyed0.columns.filterNot(keys.contains)
+          keyed0.groupBy(keys.map(col).toIndexedSeq: _*)
+            .agg(min(struct(payload.map(col).toIndexedSeq: _*)).as("_row"))
+            .select((keys.map(col) ++
+              payload.map(c => col(s"_row.$c").as(c))).toIndexedSeq: _*)
+        case Some(actTpl) =>
+          // action variants (SinkSpec scaladoc): delete tombstones the
+          // id; create keeps first, index/update keep last. One grouped
+          // agg — map-side combined, exchange keyed on the id hash,
+          // exactly like the documentId default.
+          val keyed = keyed0.withColumn("_esact", Mutate.sprintfFor(keyed0, actTpl))
+          val payload = keyed.columns.filterNot(c => keys.contains(c) || c == "_esact")
+          val pay = struct(payload.map(col).toIndexedSeq: _*)
+          val isCreate = col("_esact") === "create"
+          val isDelete = col("_esact") === "delete"
+          keyed.groupBy(keys.map(col).toIndexedSeq: _*)
+            .agg(
+              max(when(isDelete, 1).otherwise(0)).as("_del"),
+              min(when(isCreate, pay)).as("_cfirst"),
+              max(when(!isDelete && !isCreate, pay)).as("_ulast"))
+            .filter(col("_del") === 0)
+            .withColumn("_row",
+              when(col("_ulast").isNotNull, col("_ulast")).otherwise(col("_cfirst")))
+            .filter(col("_row").isNotNull) // an id of only-create-less rows can't occur; guard anyway
+            .select((keys.map(col) ++
+              payload.map(c => col(s"_row.$c").as(c))).toIndexedSeq: _*)
+      }
+    }
+    val parts = (if (spec.indexTemplate.isDefined) Seq("_index") else Nil) ++
+      (if (buckets > 0 && d.columns.contains("doc_id")) Seq("_bucket") else Nil)
+    val db = if (parts.contains("_bucket"))
+      d.withColumn("_bucket", pmod(xxhash64(col("doc_id")), lit(buckets)))
+    else d
+    // text codecs render one `value` column; the partition columns ride
+    // beside it, so a text codec + a dynamic index/bucket layout loses
+    // nothing. line (logstash-codec-line): one sprintf'd line per event;
+    // csv (logstash-output-csv): the selected fields joined; json_lines
+    // (the reference file output's default): one JSON doc per line.
+    val value: Option[Column] =
+      if (spec.codec.contains("line"))
+        Some(coalesce(Mutate.sprintfFor(db, spec.lineFormat.getOrElse("%{message}"))
+          .cast("string"), lit("")))
+      else if (spec.codec.contains("csv"))
+        Some(concat_ws(spec.csvSep,
+          spec.csvFields.map(c => coalesce(col(c).cast("string"), lit(""))): _*))
+      else if (spec.codec.exists(c => c == "json_lines" || c == "json"))
+        Some(to_json(struct(db.columns.filterNot(parts.contains).map(col).toIndexedSeq: _*)))
+      else None
+    val body = value.fold(db)(v => db.select(v.as("value") +: parts.map(col): _*))
+    // cluster dynamic-partitioned sinks by their partition values before
+    // the write (r6; guide 6: Iceberg hash distribution-mode analogue):
+    // without it ONE writer task holds rows of EVERY partition value — it
+    // sorts and writes all the dirs serially (measured 0.8 s single-task
+    // writes in pipe_es_daily) and at scale emits tasks x values small
+    // files. The exchange keys on the rendered value, so each value lands
+    // in one task = one right-sized file per dir;
+    // spark.sql.files.maxRecordsPerFile re-splits a pathologically hot
+    // value's file at scale. The partition count is pinned
+    // (defaultParallelism, scale-adaptive) because a bare keyed
+    // repartition is an AQE-coalescible exchange: byte-based coalescing
+    // folds a small sink back onto one writer task, exactly the serial
+    // write this removes.
+    val writer =
+      if (parts.isEmpty) body.write.mode("overwrite")
+      else body.repartition(df.sparkSession.sparkContext.defaultParallelism, parts.map(col): _*)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy(parts: _*)
+    if (value.isDefined) writer.text(path) else writer.parquet(path)
   }
 
   /** The default network-sink payload: every non-internal column as one

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Mutate, Route}
 
@@ -40,37 +41,81 @@ class MiscOpsSpec extends SparkSpec {
 
   test("combined plain-sink write == per-sink frames: overlap, empty sink, default, resume") {
     import graft.conditions.{Eq, InList}
-    val out = java.nio.file.Files.createTempDirectory("graft_combined").toString
+    import Route.SinkSpec
     val pipe = StandardPipeline.fromDir(spark, sfDir)
-    // never-matching plain sink (empty-dir fallback) + a sink overlapping
-    // teamA (a row must land in BOTH dirs via the explode)
-    val extra = Seq(
-      Route.SinkSpec("never_sink", Eq("severity", "NOPE")),
-      Route.SinkSpec("teamA_too", InList("team", Seq("team-0", "team-1"))))
-    val sinks = StandardPipeline.sinks ++ extra
-    val r = Route.run(spark, pipe.trunk, sinks, out)
-    assert(r.resumedSinks.isEmpty)
-    val flagged = Route.withSinkFlags(pipe.trunk, sinks)
-    for (sp <- sinks) {
-      val got = spark.read.parquet(s"$out/${sp.name}")
-      val want = Route.sinkFrame(flagged, sp)
-      assert(got.columns.toSeq == want.columns.toSeq, s"${sp.name} columns")
-      assert(got.count() == r.counts(sp.name), s"${sp.name} count")
-      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-        s"${sp.name} rows differ from the per-sink frame")
+    val teamA = InList("team", Seq("team-0", "team-1"))
+    val never = SinkSpec("never_sink", Eq("severity", "NOPE"))
+    // never-matching plain sink (an empty frame written from the driver) +
+    // a sink overlapping teamA (a row must land in BOTH dirs via the explode)
+    val standard = StandardPipeline.sinks ++ Seq(never, SinkSpec("teamA_too", teamA))
+    val twoPlain = Seq(SinkSpec("teamA_too", teamA), SinkSpec("warns", Eq("severity", "WARN")))
+    final case class Case(label: String, trunk: DataFrame, sinks: Seq[SinkSpec],
+                          writeDefault: Boolean = true, ordered: Boolean = false,
+                          buckets: Int = 0)
+    val cases = Seq(
+      Case("standard", pipe.trunk, standard),
+      Case("names a partition path would escape", pipe.trunk, Seq(SinkSpec("a=b", teamA),
+        SinkSpec("x:y", Eq("severity", "WARN")), SinkSpec("with space", Eq("severity", "ERROR")))),
+      Case("trunk with a _sink column", pipe.trunk.withColumn("_sink", lit("payload")), standard),
+      Case("single plain sink", pipe.trunk, Seq(SinkSpec("teamA_too", teamA)), writeDefault = false),
+      Case("all-empty plain sink", pipe.trunk, Seq(never), writeDefault = false),
+      Case("ordered", pipe.trunk, twoPlain, ordered = true),
+      Case("bucketed", pipe.trunk, twoPlain, buckets = 8))
+    val outs = cases.map { c =>
+      val out = java.nio.file.Files.createTempDirectory("graft_combined").toString
+      val r = Route.run(spark, c.trunk, c.sinks, out, c.writeDefault, c.ordered, c.buckets)
+      assert(r.resumedSinks.isEmpty, c.label)
+      val flagged = Route.withSinkFlags(c.trunk, c.sinks)
+      val expected = c.sinks.map(sp => sp.name -> Route.sinkFrame(flagged, sp)) ++
+        (if (c.writeDefault) Seq("_default" -> Route.defaultFrame(flagged, c.sinks)) else Nil)
+      for ((name, want) <- expected) {
+        // a bucketed sink reads back with its `_bucket` partition column
+        val got = spark.read.parquet(s"$out/$name").drop("_bucket")
+        assert(got.columns.toSeq == want.columns.toSeq, s"${c.label}: $name columns")
+        assert(got.count() == r.counts(name), s"${c.label}: $name count")
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+          s"${c.label}: $name rows differ from the per-sink frame")
+      }
+      assert(!new java.io.File(out).list().exists(_.startsWith(".sinkstage-")), c.label)
+      out -> r
     }
+    val (out, r) = outs.head
     // empty sink: directory still readable with the payload schema
     val empty = spark.read.parquet(s"$out/never_sink")
     assert(empty.count() == 0 && empty.columns.contains("doc_id"))
     // overlap: teamA_too holds exactly the teamA rows
     assert(spark.read.parquet(s"$out/teamA_too").count() == r.counts("sink_teamA"))
-    // default branch written and disjoint from every sink
-    val deflt = spark.read.parquet(s"$out/_default")
-    assert(deflt.count() == r.counts("_default"))
     // resume: every sink dir (combined-written ones included) has _SUCCESS
-    val r2 = Route.run(spark, pipe.trunk, sinks, out)
-    assert(sinks.map(_.name).toSet.subsetOf(r2.resumedSinks.toSet))
+    val r2 = Route.run(spark, pipe.trunk, standard, out)
+    assert(standard.map(_.name).toSet.subsetOf(r2.resumedSinks.toSet))
     assert(r2.counts == r.counts)
+  }
+
+  test("sink names: reserved, duplicate, empty and slash names are rejected") {
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft_names").toString
+    val df = Seq((1L, "m1")).toDF("seq", "message")
+    for (conf <- Seq("""output { sink { id => "_default" } }""",
+                     """output { sink { id => "dup" } sink { id => "dup" } }""")) {
+      val specs = graft.lscl.LsclRun.sinkSpecs(graft.lscl.Lscl.parse(conf, Map.empty).outputs)
+      intercept[IllegalArgumentException](Route.run(spark, df, specs, out))
+    }
+    for (bad <- Seq("", "a/b", ".hidden", "_lineage"))
+      intercept[IllegalArgumentException](
+        Route.run(spark, df, Seq(Route.SinkSpec(bad, graft.conditions.True)), out))
+    assert(new java.io.File(out).list().isEmpty, "a rejected run writes nothing")
+  }
+
+  test("a run reaps staging debris even when every output resumes") {
+    val out = java.nio.file.Files.createTempDirectory("graft_reap").toString
+    val pipe = StandardPipeline.fromDir(spark, sfDir)
+    Route.run(spark, pipe.trunk, StandardPipeline.sinks, out)
+    val debris = new java.io.File(out, ".sinkstage-x")
+    assert(debris.mkdir() && new java.io.File(debris, "part-0.parquet").createNewFile())
+    val r = Route.run(spark, pipe.trunk, StandardPipeline.sinks, out)
+    assert(r.resumedSinks.toSet ==
+      (StandardPipeline.sinks.map(_.name) ++ Seq("_default", "_lineage")).toSet)
+    assert(!debris.exists())
   }
 
   test("flow-rate Aggregator matches hand-computed rate and merges across partitions") {
